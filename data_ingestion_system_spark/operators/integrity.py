@@ -67,7 +67,7 @@ def not_null_check(col: str, name: str | None = None) -> Rule:
     return Rule(name or f"{col}_not_null", F.col(col).isNotNull())
 
 
-def _violations_col(rules: list[Rule]) -> Column:
+def violations_col(rules: list[Rule]) -> Column:
     """array of violated rule names (CHECK fails only on FALSE, not NULL)."""
     return F.array_compact(
         F.array(*[F.when(r.ok.eqNullSafe(F.lit(False)), F.lit(r.name)) for r in rules])
@@ -79,7 +79,7 @@ def validate(df: DataFrame, rules: list[Rule]) -> tuple[DataFrame, DataFrame]:
     `_violations` array naming every failed rule — the reject-with-reason
     record the reference's row gate produces one row at a time. One
     codegen predicate pass; no shuffle."""
-    tagged = df.withColumn("_violations", _violations_col(rules))
+    tagged = df.withColumn("_violations", violations_col(rules))
     valid = tagged.filter(F.size("_violations") == 0).drop("_violations")
     quarantined = tagged.filter(F.size("_violations") > 0)
     return valid, quarantined

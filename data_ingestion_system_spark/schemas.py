@@ -3,7 +3,7 @@
 The reference declares every table up front in one DDL file
 (reference: src/database/schema.sql) and never infers schemas for stored
 data; we mirror that discipline — every scan supplies an explicit schema
-(SURVEY.md §1.3). Two schema families:
+(SURVEY.md §1.3). Three schema families:
 
 1. the driver's synthetic TPC-H-ish tables (TESTDATA.md) that all parity
    queries run against, and
@@ -11,13 +11,15 @@ data; we mirror that discipline — every scan supplies an explicit schema
    table-shape parity contract the fixture generators must match
    column-for-column and type-for-type — enforced by
    tests/test_reference_views.py's schema-contract test, so these
-   declarations cannot drift from the frames the engine runs on.
+   declarations cannot drift from the frames the engine runs on, and
+3. the per-batch audit stores the streaming ingest paths append to.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -236,3 +238,58 @@ REVIEW_DOMAIN_SCHEMAS: dict[str, StructType] = {
     "labels": LABEL,
     "label_queue": LABEL_QUEUE,
 }
+
+
+# --- streaming audit stores ----------------------------------------------------
+# One row per micro-batch, appended last as the batch's commit marker.
+# Readers use these declared schemas instead of footer inference: a store
+# resumed across a column addition holds files with and without the
+# column, and inference reads one arbitrary footer.
+
+# streaming/ingest.dedup_insert_batch — the scrape_runs equivalent above:
+# fetched = inserted + skipped + quarantined
+INGEST_AUDIT = _st([
+    ("batch_id", LongType(), True),
+    ("fetched", LongType(), True),
+    ("inserted", LongType(), True),
+    ("skipped", LongType(), True),
+    ("quarantined", LongType(), True),
+    ("dedup_rate", DoubleType(), True),
+    ("status", StringType(), True),
+    ("duration_seconds", DoubleType(), True),
+])
+
+# streaming/ingest.evaluate_batch_health — one row per fired alert
+INGEST_ALERT = _st([
+    ("batch_id", LongType(), True),
+    ("alert", StringType(), True),
+])
+
+# streaming/neardup.neardup_insert_batch:
+# fetched = dup_vs_store + dup_within_batch + inserted
+NEARDUP_AUDIT = _st([
+    ("batch_id", LongType(), True),
+    ("fetched", LongType(), True),
+    ("dup_vs_store", LongType(), True),
+    ("dup_within_batch", LongType(), True),
+    ("inserted", LongType(), True),
+    ("duration_seconds", DoubleType(), True),
+])
+
+# streaming/cdc.run_cdc_stream: fetched = upserted + deleted + skipped_stale
+CDC_AUDIT = _st([
+    ("batch_id", LongType(), True),
+    ("fetched", LongType(), True),
+    ("upserted", LongType(), True),
+    ("deleted", LongType(), True),
+    ("skipped_stale", LongType(), True),
+])
+
+# streaming/driftmon.run_drift_monitor
+PSI_AUDIT = _st([
+    ("batch_id", LongType(), True),
+    ("n_rows", LongType(), True),
+    ("psi", DoubleType(), True),
+    ("alert", BooleanType(), True),
+    ("ts", DoubleType(), True),
+])

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.operators.merge import _swap_write
+from data_ingestion_system_spark.schemas import CDC_AUDIT
+from data_ingestion_system_spark.tables import local_rows_df
 
 STATE_COLS = ["key", "last_seq", "payload_type", "payload_value"]
 
@@ -134,7 +136,8 @@ def run_cdc_stream(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         counters = cdc_apply_batch(spark, batch_df, state_dir)
         if audit_dir is not None:
-            spark.createDataFrame(
+            local_rows_df(
+                spark,
                 [
                     (
                         batch_id,
@@ -144,8 +147,7 @@ def run_cdc_stream(
                         counters["skipped_stale"],
                     )
                 ],
-                "batch_id long, fetched long, upserted long, deleted long, "
-                "skipped_stale long",
+                CDC_AUDIT,
             ).write.mode("append").parquet(audit_dir)
 
     return (

@@ -36,8 +36,10 @@ import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from data_ingestion_system_spark.streaming.ingest import IngestPaths
+from data_ingestion_system_spark.tables import local_rows_df
 
 TOMBSTONES = "tombstones"
 
@@ -74,9 +76,9 @@ def forget_keys(
 ) -> dict:
     """Erase the keys from target + provenance and append them to the
     suppression list. Returns per-store removed-row counts."""
-    keys = spark.createDataFrame(
-        [(v,) for v in key_values], f"{key_col} long"
-    ).localCheckpoint(eager=True)
+    keys = local_rows_df(
+        spark, [(v,) for v in key_values], StructType([StructField(key_col, LongType())])
+    )
     removed_target = _rewrite_without(spark, paths.target_dir, key_col, keys, None)
     removed_prov = _rewrite_without(
         spark, paths.provenance_dir, key_col, keys, "batch_id"

@@ -31,6 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_ingestion_system_spark.schemas import INGEST_ALERT, INGEST_AUDIT
+from data_ingestion_system_spark.tables import local_rows_df
+
 
 @dataclass
 class IngestPaths:
@@ -47,6 +50,10 @@ class IngestPaths:
 DEDUP_RATE_ALERT = 0.995
 INSERT_DROP_FACTOR = 0.5
 DURATION_SPIKE_FACTOR = 2.0
+
+
+def _has_parquet(path: str) -> bool:
+    return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
 
 
 def evaluate_batch_health(
@@ -75,11 +82,10 @@ def evaluate_batch_health(
     a full-history single-partition window sort; a healthy batch writes
     NOTHING (no empty-file accretion in alerts_dir)."""
     avg_inserted5 = avg_duration5 = None
-    if os.path.isdir(paths.audit_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(paths.audit_dir)
-    ):
+    if _has_parquet(paths.audit_dir):
         prev = (
-            spark.read.parquet(paths.audit_dir)
+            spark.read.schema(INGEST_AUDIT)
+            .parquet(paths.audit_dir)
             .filter(F.col("batch_id") < int(batch_id))
             .orderBy(F.col("batch_id").desc())
             .limit(5)
@@ -99,8 +105,8 @@ def evaluate_batch_health(
         alerts.append("duration_spike")
     _migrate_legacy_flat_alerts(spark, paths.alerts_dir)
     if alerts:
-        spark.createDataFrame(
-            [(int(batch_id), a) for a in alerts], "batch_id long, alert string"
+        local_rows_df(
+            spark, [(int(batch_id), a) for a in alerts], INGEST_ALERT
         ).write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("batch_id").parquet(paths.alerts_dir)
@@ -176,10 +182,29 @@ def dedup_insert_batch(
     With ``rules`` (operators/integrity.Rule list — the CHECK-constraint
     gate the reference's schema enforces per-row, schema.sql:58,89-90,
     293-299), violators are diverted to ``paths.quarantine_dir`` with a
-    `_violations` reasons column before dedup, written partitioned by
-    batch_id with dynamic overwrite (replay-idempotent, like
-    provenance), and counted in the audit record:
-    fetched = inserted + skipped + quarantined.
+    `_violations` reasons column, written partitioned by batch_id with
+    dynamic overwrite (replay-idempotent, like provenance), and counted
+    in the audit record: fetched = inserted + skipped + quarantined.
+
+    Job chain per batch (one job per materialization, none for schema
+    inference — every store is read with its declared schema):
+
+    1. replay check: a pruned scan of the audit's batch_id column;
+    2. each distinct key is tagged ONCE with its `_violations` and
+       whether the target already holds it (a left join against the
+       target's key column — the target scan stays column-pruned, and
+       target keys are unique by this function's own invariant, so the
+       join never multiplies a row). The tagged relation is checkpointed
+       lazily, and ONE aggregate over it yields fetched, quarantined and
+       inserted — that action is also what materializes the checkpoint
+       (the dedup shuffle and the key broadcast run as its stages);
+    3. quarantine, target, provenance and audit writes, each one job
+       over the checkpointed rows. The checkpoint is materialized before
+       the target append, so the append never re-reads the target it
+       writes (self-read-write).
+
+    The audit row is built as a JVM-side LocalRelation
+    (`tables.local_rows_df`): no Python worker runs for it.
 
     Replay-safe: the audit row is the commit marker — a replayed batch
     whose audit row already exists is skipped outright, and provenance is
@@ -187,7 +212,7 @@ def dedup_insert_batch(
     between the provenance and audit writes cannot double-log keys. (A
     crash between the target append and the audit write replays with
     inserted=0/skipped=fetched — honest INSERT-OR-IGNORE accounting; the
-    target itself stays exact via the anti-join.)
+    target itself stays exact via the key join.)
     """
     import time as _time
 
@@ -199,74 +224,67 @@ def dedup_insert_batch(
             "dedup_insert_batch: rules= requires paths.quarantine_dir "
             "(CHECK violators are diverted, never destroyed)"
         )
-    audit_exists = os.path.isdir(paths.audit_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(paths.audit_dir)
-    )
-    if audit_exists:
+    if _has_parquet(paths.audit_dir):
         already_done = (
-            spark.read.parquet(paths.audit_dir)
+            spark.read.schema(INGEST_AUDIT)
+            .parquet(paths.audit_dir)
             .filter(F.col("batch_id") == int(batch_id))
-            .limit(1)
-            .count()
+            .select("batch_id")
+            .collect()  # one scan job; at most this batch's one marker row
         )
         if already_done:
             return
 
-    batch_df = batch_df.dropDuplicates([key_col]).localCheckpoint(eager=True)
-    fetched = batch_df.count()
-    # provenance logs EVERY fetched key — including ones the CHECK gate
-    # quarantines below — so the fetched/inserted/skipped/quarantined
-    # audit counts reconcile against the provenance log exactly. The
-    # `quarantined` flag keeps first-INSERT semantics recoverable:
-    # timetravel's MIN(batch_id)-per-key must run over flag=false rows
-    # only, or a key quarantined in batch Q and inserted in batch I > Q
-    # would backdate snapshots to Q.
-    prov_df = batch_df.select(F.col(key_col), F.lit(False).alias("quarantined"))
-
-    quarantined = 0
+    cols = batch_df.columns
+    tagged = batch_df.dropDuplicates([key_col])
+    passes = F.lit(True)
     if rules:
-        from data_ingestion_system_spark.operators.integrity import validate
+        from data_ingestion_system_spark.operators.integrity import violations_col
 
-        valid_df, quar_df = validate(batch_df, rules)
-        if paths.quarantine_dir is not None:
-            quar_df.withColumn(
-                "batch_id", F.lit(int(batch_id)).cast("long")
-            ).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("batch_id").parquet(paths.quarantine_dir)
-        batch_df = valid_df.localCheckpoint(eager=True)
-        quarantined = fetched - batch_df.count()
-        prov_df = valid_df.select(
-            F.col(key_col), F.lit(False).alias("quarantined")
-        ).unionByName(
-            quar_df.select(F.col(key_col), F.lit(True).alias("quarantined"))
+        tagged = tagged.withColumn("_violations", violations_col(rules))
+        passes = F.size("_violations") == 0
+    is_new = F.lit(True)
+    if _has_parquet(paths.target_dir):
+        stored = (
+            spark.read.schema(StructType([batch_df.schema[key_col]]))
+            .parquet(paths.target_dir)
+            .withColumn("_stored", F.lit(True))
         )
-
-    target_exists = os.path.isdir(paths.target_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(paths.target_dir)
-    )
-    if target_exists:
-        existing_keys = spark.read.parquet(paths.target_dir).select(key_col)
-        # eager localCheckpoint pins the anti-join result: the lineage must
-        # not recompute by re-reading target_dir mid-append (self-read-write)
-        new_rows = batch_df.join(existing_keys, key_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-    else:
-        new_rows = batch_df
-    inserted = new_rows.count()
+        tagged = tagged.join(stored, key_col, "left")
+        is_new = F.col("_stored").isNull()
+    tagged = tagged.localCheckpoint(eager=False)
+    counts = tagged.agg(
+        F.count(F.lit(1)),
+        F.count(F.when(~passes, 1)),
+        F.count(F.when(passes & is_new, 1)),
+    ).first()
+    fetched, quarantined, inserted = (int(c) for c in counts)
     skipped = fetched - quarantined - inserted
     status = "completed" if fetched else "empty"
 
-    new_rows.write.mode("append").parquet(paths.target_dir)
-    # provenance: every fetched key is logged for this run, including skips
-    # (review_scrape_log records re-fetches too, db_manager.py:488-506);
-    # partitioned by batch_id + dynamic overwrite → idempotent under replay
-    prov_df.withColumn(
-        "batch_id", F.lit(batch_id).cast("long")
-    ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-        "batch_id"
-    ).parquet(paths.provenance_dir)
+    batch_col = F.lit(int(batch_id)).cast("long").alias("batch_id")
+    if rules:
+        tagged.filter(~passes).select(*cols, "_violations", batch_col).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy("batch_id").parquet(
+            paths.quarantine_dir
+        )
+    tagged.filter(passes & is_new).select(*cols).write.mode("append").parquet(
+        paths.target_dir
+    )
+    # provenance logs EVERY fetched key — including the quarantined ones
+    # — so the fetched/inserted/skipped/quarantined audit counts reconcile
+    # against it exactly, and re-fetches too (review_scrape_log,
+    # db_manager.py:488-506). The `quarantined` flag keeps first-INSERT
+    # semantics recoverable: timetravel's MIN(batch_id)-per-key must run
+    # over flag=false rows only, or a key quarantined in batch Q and
+    # inserted in batch I > Q would backdate snapshots to Q. Partitioned
+    # by batch_id + dynamic overwrite → idempotent under replay.
+    tagged.select(key_col, (~passes).alias("quarantined"), batch_col).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy("batch_id").parquet(
+        paths.provenance_dir
+    )
     dedup_rate = float(skipped) / fetched if fetched else 0.0
     duration = _time.perf_counter() - t0
     # health alerts are pre-marker writes (dynamic overwrite of this
@@ -276,14 +294,12 @@ def dedup_insert_batch(
         evaluate_batch_health(
             spark, paths, int(batch_id), inserted, dedup_rate, duration
         )
-    audit = spark.createDataFrame(
+    local_rows_df(
+        spark,
         [(int(batch_id), fetched, inserted, skipped, quarantined,
           dedup_rate, status, duration)],
-        "batch_id long, fetched long, inserted long, skipped long,"
-        " quarantined long, dedup_rate double, status string,"
-        " duration_seconds double",
-    )
-    audit.write.mode("append").parquet(paths.audit_dir)
+        INGEST_AUDIT,
+    ).write.mode("append").parquet(paths.audit_dir)
 
 
 def run_file_ingestion(
@@ -325,6 +341,25 @@ def run_file_ingestion(
     else:
         query.awaitTermination()
     return query
+
+
+def jobs_per_batch(spark: SparkSession, query) -> dict:
+    """Spark jobs a finished streaming query ran, keyed by micro-batch id.
+
+    Read in-process from the driver's status store (the UI may be off):
+    the query's runId is the job group of every job it runs, and each
+    job's description ends with the `batch = <id>` it ran in. Job events
+    reach the store asynchronously, so the listener bus is drained first."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    per_batch: dict = {}
+    for job_id in sc.statusTracker().getJobIdsForGroup(str(query.runId)):
+        desc = store.job(job_id).description()
+        b = desc.get().rsplit("batch = ", 1)[-1].strip() if desc.isDefined() else "?"
+        key = int(b) if b.isdigit() else b
+        per_batch[key] = per_batch.get(key, 0) + 1
+    return per_batch
 
 
 def windowed_event_counts(

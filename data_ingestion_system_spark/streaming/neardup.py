@@ -49,6 +49,8 @@ from data_ingestion_system_spark.dedup.minhash import (
     token_sets,
     verified_pairs,
 )
+from data_ingestion_system_spark.schemas import NEARDUP_AUDIT
+from data_ingestion_system_spark.tables import local_rows_df
 
 
 @dataclass
@@ -104,7 +106,23 @@ def neardup_insert_batch(
     within the batch (smallest doc_id of a verified pair wins), append
     survivors and their index state, record the audit row (with the
     batch's wall seconds, so scale probes read per-batch cost from the
-    operator's own audit instead of inferring it from totals)."""
+    operator's own audit instead of inferring it from totals).
+
+    Job chain per batch (one job per materialization; stores are read
+    with declared or partition-pruned schemas):
+
+    1. replay check: a pruned scan of the audit's batch_id column;
+    2. `batch`, its token sets and band keys are checkpointed lazily:
+       `fetched = batch.count()` materializes the deduplicated batch,
+       the token and band relations are materialized by the first job
+       that reads them — no separate eager-checkpoint job each;
+    3. `remaining` (after the band-key join and exact Jaccard against
+       the stored corpus) and `survivors` (after the within-batch pass)
+       are lazy checkpoints too, each materialized by the `count()` the
+       audit needs — so both are pinned before any state write;
+    4. survivor, band and token writes into this batch's partitions,
+       then the audit marker, a JVM-side LocalRelation
+       (`tables.local_rows_df`) that needs no Python worker."""
     import time as _time
 
     t0 = _time.perf_counter()
@@ -112,18 +130,19 @@ def neardup_insert_batch(
         _migrate_legacy_flat(d)
     if _dir_has_parquet(paths.audit_dir):
         already = (
-            spark.read.parquet(paths.audit_dir)
+            spark.read.schema(NEARDUP_AUDIT)
+            .parquet(paths.audit_dir)
             .filter(F.col("batch_id") == int(batch_id))
-            .limit(1)
-            .count()
+            .select("batch_id")
+            .collect()  # one scan job; at most this batch's one marker row
         )
         if already:
             return
 
-    batch = batch_df.dropDuplicates(["doc_id"]).localCheckpoint(eager=True)
+    batch = batch_df.dropDuplicates(["doc_id"]).localCheckpoint(eager=False)
     fetched = batch.count()
-    toks = token_sets(batch).localCheckpoint(eager=True)
-    bands = band_keys(minhash_signatures(toks)).localCheckpoint(eager=True)
+    toks = token_sets(batch).localCheckpoint(eager=False)
+    bands = band_keys(minhash_signatures(toks)).localCheckpoint(eager=False)
 
     if _dir_has_parquet(paths.bands_dir):
         # exclude this batch's own partition: a replay of a mid-batch
@@ -162,7 +181,7 @@ def neardup_insert_batch(
             .distinct()
         )
         remaining = batch.join(dup_vs_store_ids, "doc_id", "left_anti").localCheckpoint(
-            eager=True
+            eager=False
         )
     else:
         remaining = batch
@@ -172,7 +191,7 @@ def neardup_insert_batch(
     rbands = bands.join(remaining.select("doc_id"), "doc_id", "left_semi")
     within = verified_pairs(rtoks, candidate_pairs(rbands, n_docs=0), threshold, n_docs=0)
     drop_ids = within.select(F.col("doc_b").alias("doc_id")).distinct()
-    survivors = remaining.join(drop_ids, "doc_id", "left_anti").localCheckpoint(eager=True)
+    survivors = remaining.join(drop_ids, "doc_id", "left_anti").localCheckpoint(eager=False)
     inserted = survivors.count()
 
     # state writes go to per-batch partition dirs with OVERWRITE: a
@@ -188,7 +207,8 @@ def neardup_insert_batch(
     toks.join(keep, "doc_id", "left_semi").write.mode("overwrite").parquet(
         os.path.join(paths.tokens_dir, sub)
     )
-    audit = spark.createDataFrame(
+    audit = local_rows_df(
+        spark,
         [
             (
                 int(batch_id),
@@ -199,8 +219,7 @@ def neardup_insert_batch(
                 round(_time.perf_counter() - t0, 3),
             )
         ],
-        "batch_id long, fetched long, dup_vs_store long, dup_within_batch long,"
-        " inserted long, duration_seconds double",
+        NEARDUP_AUDIT,
     )
     _append_audit(audit, paths.audit_dir)
 
@@ -245,8 +264,9 @@ def accepted_docs(
     # batch_id=-1 is the migrated legacy partition — committed by
     # construction (see _migrate_legacy_flat)
     committed = (
-        spark.read.parquet(paths.audit_dir)
-        .select(F.col("batch_id").cast("long"))
+        spark.read.schema(NEARDUP_AUDIT)
+        .parquet(paths.audit_dir)
+        .select("batch_id")
         .union(spark.range(1).select(F.lit(-1).cast("long").alias("batch_id")))
     )
     return (

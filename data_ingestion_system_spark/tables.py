@@ -520,6 +520,27 @@ def _declared_reduce_width(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def local_rows_df(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """A few one-shot driver-held rows → a JVM-side LocalRelation
+    (LocalTableScan): an audit row, alert rows, a key list to erase.
+
+    `spark.createDataFrame(list_of_tuples)` goes through `parallelize`
+    over `defaultParallelism` slices and a Python `map`, so every such
+    frame runs a PythonRDD stage and keeps Python worker processes alive
+    for one row. An Arrow table is handed to the JVM whole and scanned
+    there: no Python worker, no extra stage.
+
+    Frames re-created in a loop that then feed heavier plans (memoized
+    index artifacts replayed per query) use `replay_rows_df` instead."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def replay_rows_df(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
     """Small driver-held row set → RDD-backed DataFrame (ExistingRDD scan).
 
@@ -528,6 +549,8 @@ def replay_rows_df(spark: SparkSession, rows: list, schema: StructType | str) ->
     a loop makes every pass a *different* source that Janino recompiles
     (~seconds each); an ExistingRDD scan keeps the compiled-code cache hot.
     Used to replay memoized index artifacts (IVF centroids, PQ codebooks).
+    One-shot rows that are only written or joined once (audit markers)
+    use `local_rows_df`, which needs no Python worker.
     """
     return spark.createDataFrame(spark.sparkContext.parallelize(list(rows), 1), schema)
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from data_ingestion_system_spark.schemas import TESTDATA_SCHEMAS
 from data_ingestion_system_spark.streaming.ingest import (
     IngestPaths,
+    jobs_per_batch,
     run_file_ingestion,
     run_windowed_stream,
     streaming_dedup_within_watermark,
@@ -524,3 +525,199 @@ def test_alerts_dir_legacy_flat_migrates(spark, tmp_path):
                           duration_seconds=0.1)
     rows2 = {(r.batch_id, r.alert) for r in spark.read.parquet(str(alerts_dir)).collect()}
     assert rows2 == rows
+
+
+# Spark jobs per micro-batch of the CHECK-gated event drain below:
+#   batch 0 — dedup shuffle, tagged-row aggregate (2), four store writes;
+#   later   — plus the replay-check scan and the target-key broadcast.
+# A budget may be lowered by the change that earns it; raising one needs
+# a reason recorded in CHANGES.md.
+EVENT_BATCH_JOB_BUDGET = {0: 7, 1: 9, 2: 9}
+NEARDUP_DRAIN_JOB_CEILING = 60
+
+
+def test_ingest_drains_within_job_budget_without_python_rows(
+    spark, sf_dir, overlap_batches, tmp_path, monkeypatch
+):
+    """Both foreachBatch bodies keep the micro-batch on the JVM: no frame
+    is built from driver rows through `parallelize` (a Python worker
+    stage per audit row), and each materialization is one job."""
+    from pyspark import SparkContext
+
+    from data_ingestion_system_spark.operators.integrity import event_rules
+    from data_ingestion_system_spark.streaming.neardup import (
+        NearDupPaths,
+        run_neardup_ingestion,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    doc_src = str(tmp_path / "doc_landing")
+    for i, (lo, hi) in enumerate([(0, 300), (200, 500)]):  # 100 re-delivered
+        staging = tmp_path / f"doc_staging{i}"
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
+            1
+        ).write.parquet(str(staging))
+        part = next(p for p in os.listdir(staging) if p.endswith(".parquet"))
+        os.makedirs(doc_src, exist_ok=True)
+        os.rename(staging / part, os.path.join(doc_src, f"docs_{i}.parquet"))
+
+    def no_driver_rdd(*_a, **_kw):
+        raise AssertionError("a driver-row RDD was built inside a drain")
+
+    monkeypatch.setattr(SparkContext, "parallelize", no_driver_rdd)
+    paths = IngestPaths(
+        source_dir=overlap_batches,
+        target_dir=str(tmp_path / "target"),
+        audit_dir=str(tmp_path / "audit"),
+        provenance_dir=str(tmp_path / "prov"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        quarantine_dir=str(tmp_path / "quar"),
+    )
+    q = run_file_ingestion(
+        spark, paths, TESTDATA_SCHEMAS["events"], key_col="event_id",
+        rules=event_rules(),
+    )
+    nd = NearDupPaths(
+        source_dir=doc_src,
+        target_dir=str(tmp_path / "docs"),
+        bands_dir=str(tmp_path / "bands"),
+        tokens_dir=str(tmp_path / "tokens"),
+        audit_dir=str(tmp_path / "docs_audit"),
+        checkpoint_dir=str(tmp_path / "docs_ckpt"),
+    )
+    nq = run_neardup_ingestion(spark, nd, TESTDATA_SCHEMAS["documents"])
+    monkeypatch.undo()
+
+    assert jobs_per_batch(spark, q) == EVENT_BATCH_JOB_BUDGET
+    assert sum(jobs_per_batch(spark, nq).values()) <= NEARDUP_DRAIN_JOB_CEILING
+    audit = spark.read.parquet(paths.audit_dir).collect()
+    assert len(audit) == 3
+    assert all(r.fetched == r.inserted + r.skipped + r.quarantined for r in audit)
+    assert sum(r.inserted for r in audit) == spark.read.parquet(paths.target_dir).count()
+    nd_audit = {r.batch_id: r for r in spark.read.parquet(nd.audit_dir).collect()}
+    assert sorted(nd_audit) == [0, 1] and nd_audit[1].dup_vs_store >= 100
+
+
+# The stores' physical layout (column, parquet→arrow type, in file order;
+# partition columns live in the directory names). Readers outside Spark
+# (pyarrow, DuckDB) and stores resumed across versions depend on it.
+EVENT_COLUMNS = [
+    ("event_id", "int64"), ("ts", "timestamp[ns]"), ("user_id", "int64"),
+    ("event_type", "string"), ("value", "double"), ("props", "string"),
+]
+STORE_LAYOUT = {
+    "target": EVENT_COLUMNS,
+    "quar": EVENT_COLUMNS + [("_violations", "list<element: string not null>")],
+    "prov": [("event_id", "int64"), ("quarantined", "bool")],
+    "audit": [
+        ("batch_id", "int64"), ("fetched", "int64"), ("inserted", "int64"),
+        ("skipped", "int64"), ("quarantined", "int64"), ("dedup_rate", "double"),
+        ("status", "string"), ("duration_seconds", "double"),
+    ],
+}
+
+
+def _file_layouts(path) -> set:
+    import pyarrow.parquet as pq
+
+    return {
+        tuple((f.name, str(f.type)) for f in pq.read_schema(os.path.join(d, name)))
+        for d, _, files in os.walk(path)
+        for name in files
+        if name.endswith(".parquet")
+    }
+
+
+def test_event_stores_keep_their_layout(spark, overlap_batches, tmp_path):
+    from data_ingestion_system_spark.operators.integrity import event_rules
+
+    paths = IngestPaths(
+        source_dir=overlap_batches,
+        target_dir=str(tmp_path / "target"),
+        audit_dir=str(tmp_path / "audit"),
+        provenance_dir=str(tmp_path / "prov"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        quarantine_dir=str(tmp_path / "quar"),
+        alerts_dir=str(tmp_path / "alerts"),
+    )
+    run_file_ingestion(
+        spark, paths, TESTDATA_SCHEMAS["events"], key_col="event_id",
+        rules=event_rules(),
+    )
+    for store, cols in STORE_LAYOUT.items():
+        assert _file_layouts(str(tmp_path / store)) == {tuple(cols)}, store
+    quar = spark.read.parquet(paths.quarantine_dir)
+    assert quar.count() > 0
+    assert quar.filter(F.size("_violations") == 0).count() == 0
+    prov = spark.read.parquet(paths.provenance_dir)
+    assert prov.filter("quarantined").count() == quar.count()
+
+
+def test_appends_to_store_of_previous_layout(spark, tmp_path):
+    """A store left by earlier writers — with an audit file from before
+    the duration_seconds column — is appended to and read back. Footer
+    inference over such an audit dir sees whichever file it opens (here
+    the only one, which lacks the column the health check averages); the
+    declared audit schema reads both generations."""
+    import datetime as dt
+
+    from data_ingestion_system_spark.operators.integrity import event_rules
+    from data_ingestion_system_spark.schemas import INGEST_AUDIT
+    from data_ingestion_system_spark.streaming.ingest import dedup_insert_batch
+
+    ts = dt.datetime(2024, 1, 1)
+    batch0 = spark.createDataFrame(
+        [(1, ts, 10, "click", 1.0, None), (2, ts, 11, "error", 1.0, None)],
+        EVENTS_SCHEMA_DDL,
+    )
+    paths = IngestPaths(
+        source_dir=str(tmp_path / "src"),
+        target_dir=str(tmp_path / "target"),
+        audit_dir=str(tmp_path / "audit"),
+        provenance_dir=str(tmp_path / "prov"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        quarantine_dir=str(tmp_path / "quar"),
+        alerts_dir=str(tmp_path / "alerts"),
+    )
+    # batch 0 as the earlier writers left it
+    batch0.filter("event_id = 1").write.parquet(paths.target_dir)
+    batch0.filter("event_id = 2").withColumn(
+        "_violations", F.array(F.lit("event_type_enum"))
+    ).withColumn("batch_id", F.lit(0).cast("long")).write.partitionBy("batch_id").parquet(
+        paths.quarantine_dir
+    )
+    batch0.select("event_id", (F.col("event_id") == 2).alias("quarantined")).withColumn(
+        "batch_id", F.lit(0).cast("long")
+    ).write.partitionBy("batch_id").parquet(paths.provenance_dir)
+    spark.createDataFrame(
+        [(0, 2, 1, 0, 1, 0.0, "completed")],
+        "batch_id long, fetched long, inserted long, skipped long,"
+        " quarantined long, dedup_rate double, status string",
+    ).write.parquet(paths.audit_dir)
+
+    batch1 = batch0.union(
+        batch0.filter("event_id = 1").withColumn("event_id", F.lit(3).cast("long"))
+    )
+    dedup_insert_batch(spark, batch1, 1, "event_id", paths, rules=event_rules())
+    dedup_insert_batch(spark, batch1, 1, "event_id", paths, rules=event_rules())  # replay
+
+    assert sorted(r.event_id for r in spark.read.parquet(paths.target_dir).collect()) == [1, 3]
+    audit = {
+        r.batch_id: r
+        for r in spark.read.schema(INGEST_AUDIT).parquet(paths.audit_dir).collect()
+    }
+    assert set(audit) == {0, 1}
+    assert audit[0].duration_seconds is None and audit[1].duration_seconds is not None
+    a1 = audit[1]
+    assert (a1.fetched, a1.inserted, a1.skipped, a1.quarantined) == (3, 1, 1, 1)
+    prov = {
+        (r.batch_id, r.event_id, r.quarantined)
+        for r in spark.read.parquet(paths.provenance_dir).collect()
+    }
+    assert prov == {
+        (0, 1, False), (0, 2, True), (1, 1, False), (1, 2, True), (1, 3, False)
+    }
+    quar = spark.read.parquet(paths.quarantine_dir).collect()
+    assert sorted((r.batch_id, r.event_id, list(r._violations)) for r in quar) == [
+        (0, 2, ["event_type_enum"]), (1, 2, ["event_type_enum"])
+    ]

@@ -6,11 +6,12 @@ Measures two surfaces:
   1. `run_file_ingestion` — exact-dedup INSERT-OR-IGNORE over events,
      N_BATCHES landing files drained with Trigger.AvailableNow; reports
      per-batch duration (from the audit table the operator itself
-     writes), end-to-end rows/s, and the state-size trajectory (target
-     rows + bytes after each batch — the anti-join's build side).
+     writes) next to per-batch Spark jobs (from the driver's status
+     store, by the query's runId), end-to-end rows/s, and the final
+     target bytes (the key join's build side).
   2. `run_neardup_ingestion` — MinHash-LSH near-dup filtering over
-     documents; reports per-batch fetched/dup counts, wall seconds, and
-     the index state (bands + tokens bytes) growth.
+     documents; reports per-batch fetched/dup counts, wall seconds and
+     jobs, and the index state (bands + tokens bytes) growth.
 
 Usage:
     python tools/streaming_scale_probe.py /tmp/sf1.0
@@ -30,9 +31,11 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from data_ingestion_system_spark.schemas import INGEST_AUDIT, NEARDUP_AUDIT  # noqa: E402
 from data_ingestion_system_spark.session import get_spark  # noqa: E402
 from data_ingestion_system_spark.streaming.ingest import (  # noqa: E402
     IngestPaths,
+    jobs_per_batch,
     run_file_ingestion,
 )
 from data_ingestion_system_spark.streaming.neardup import (  # noqa: E402
@@ -48,8 +51,8 @@ N_DOC_BATCHES = 5
 def _batch_sec(a: dict):
     """Per-batch wall from the audit row, None for rows written before the
     duration_seconds column existed (an audit dir resumed across the r8
-    schema change holds mixed 5/6-column files; parquet schema-merges the
-    missing column to null)."""
+    schema change holds mixed 5/6-column files; the declared audit schema
+    reads the missing column as null)."""
     d = a.get("duration_seconds")
     return round(d, 2) if d is not None else None
 
@@ -75,11 +78,12 @@ def probe_event_ingestion(spark, sf_dir: str, root: str) -> dict:
         checkpoint_dir=os.path.join(root, "ev_ckpt"),
     )
     t0 = time.perf_counter()
-    run_file_ingestion(spark, paths, ev.schema, key_col="event_id")
+    query = run_file_ingestion(spark, paths, ev.schema, key_col="event_id")
     wall = time.perf_counter() - t0
+    jobs = jobs_per_batch(spark, query)
     audit = [
         r.asDict()
-        for r in spark.read.parquet(paths.audit_dir).orderBy("batch_id").collect()
+        for r in spark.read.schema(INGEST_AUDIT).parquet(paths.audit_dir).orderBy("batch_id").collect()
     ]
     return {
         "surface": "run_file_ingestion(events, exact dedup)",
@@ -88,6 +92,7 @@ def probe_event_ingestion(spark, sf_dir: str, root: str) -> dict:
         "wall_sec": round(wall, 1),
         "rows_per_sec": round(n / wall),
         "per_batch_sec": [_batch_sec(a) for a in audit],
+        "per_batch_jobs": [jobs.get(a["batch_id"], 0) for a in audit],
         "per_batch_inserted": [a["inserted"] for a in audit],
         "target_bytes_final": _dir_bytes(paths.target_dir),
     }
@@ -107,11 +112,12 @@ def probe_neardup_ingestion(spark, sf_dir: str, root: str) -> dict:
         checkpoint_dir=os.path.join(root, "nd_ckpt"),
     )
     t0 = time.perf_counter()
-    run_neardup_ingestion(spark, paths, docs.schema)
+    query = run_neardup_ingestion(spark, paths, docs.schema)
     wall = time.perf_counter() - t0
+    jobs = jobs_per_batch(spark, query)
     audit = [
         r.asDict()
-        for r in spark.read.parquet(paths.audit_dir).orderBy("batch_id").collect()
+        for r in spark.read.schema(NEARDUP_AUDIT).parquet(paths.audit_dir).orderBy("batch_id").collect()
     ]
     inserted = sum(a["inserted"] for a in audit)
     return {
@@ -125,6 +131,7 @@ def probe_neardup_ingestion(spark, sf_dir: str, root: str) -> dict:
             for a in audit
         ],
         "per_batch_sec": [_batch_sec(a) for a in audit],
+        "per_batch_jobs": [jobs.get(a["batch_id"], 0) for a in audit],
         "inserted_total": inserted,
         "index_state_bytes": _dir_bytes(paths.bands_dir) + _dir_bytes(paths.tokens_dir),
     }
